@@ -136,8 +136,8 @@ object SparkEntry {
 
   /** Normalize `events.ts` to a session-zone timestamp whatever the
     * testdata vintage stored physically: nanosecond-int64 (read with
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench
-    * sessions), TIMESTAMP_NTZ (microsecond parquet timestamps), or a
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by
+    * [[GraftSession]]), TIMESTAMP_NTZ (microsecond parquet timestamps), or a
     * plain timestamp. Downstream operators always see TimestampType
     * (unix_millis & friends reject NTZ).
     */

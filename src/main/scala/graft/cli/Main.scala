@@ -2,8 +2,7 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.catalog.MetaStore
 import graft.compile.PipelineCompiler
 import graft.run.PipelineRunner
@@ -18,6 +17,8 @@ import graft.spec.SpecJson
   *   explain <id>              print the optimized plan (dry run)
   *   validate <id> <source>    infer + report a source's schema
   * Catalog root: $GRAFT_HOME (reference: $PIPELINE_DB, main.py:21).
+  * Session: [[GraftSession]] — master from $GRAFT_MASTER, else
+  * local[$SPARK_GRAFT_CPUS], else local[<all cores>].
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -38,7 +39,7 @@ object Main {
           case _: java.nio.file.NoSuchFileException =>
             System.err.println(s"error: no such pipeline '$id'"); sys.exit(1)
         }
-        val spark = session()
+        val spark = GraftSession.getOrCreate()
         val res = PipelineRunner.run(spark, spec, id, Some(store))
         println(s"run ${res.runId}: ${res.status} rows_read=${res.rowsRead} " +
           s"rows_written=${res.rowsWritten} duration_ms=${res.durationMs}" +
@@ -65,7 +66,7 @@ object Main {
           case _: java.nio.file.NoSuchFileException =>
             System.err.println(s"error: no such pipeline '$id'"); sys.exit(1)
         }
-        val spark = session()
+        val spark = GraftSession.getOrCreate()
         try println(PipelineCompiler.compile(spark, spec).df.queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode))
         finally spark.stop()
@@ -79,7 +80,7 @@ object Main {
         spec.sources.find(_.name == sourceName) match {
           case None => println(s"""{"valid": false, "error": "no such source '$sourceName'"}"""); sys.exit(1)
           case Some(s) =>
-            val spark = session()
+            val spark = GraftSession.getOrCreate()
             val out = try graft.run.SchemaValidate.report(spark, s) finally spark.stop()
             println(out)
             if (out.startsWith("""{"valid": false""")) sys.exit(1)
@@ -91,13 +92,4 @@ object Main {
         sys.exit(2)
     }
   }
-
-  private def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-    .appName("graft")
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.GraftAnalysisException
 import graft.sinks.SinkWriter
 import graft.sources.SourceReader
-import graft.spec.PipelineSpec
+import graft.spec.{PipelineSpec, TransformSpec}
 import graft.transforms.Transforms
 
 /** Spec → Catalyst logical plan.
@@ -35,7 +35,23 @@ object PipelineCompiler {
         * after the first sink action. */
       stageObs: Seq[(String, org.apache.spark.sql.Observation)] = Nil)
 
-  def validate(spec: PipelineSpec): Unit = {
+  /** Refuses a spec with every problem listed at once. */
+  def validate(spec: PipelineSpec): Unit = refuse(graphErrors(spec) ++ spec.sinks.collect {
+    case s if !SinkWriter.knownTypes.contains(s.sinkType) =>
+      s"sink '${s.name}': unknown type '${s.sinkType}'"
+  })
+
+  /** [[validate]] without the sink-type check, which is per mode: the
+    * streaming runner refuses a sink type it cannot start as it starts
+    * the sink (`memory` and `console` are streaming-only). */
+  def validateGraph(spec: PipelineSpec): Unit = refuse(graphErrors(spec))
+
+  private def refuse(errs: Seq[String]): Unit =
+    if (errs.nonEmpty)
+      throw new GraftAnalysisException(errs.mkString("invalid pipeline spec:\n  ", "\n  ", ""))
+
+  /** Source and transform problems, the checks both runners share. */
+  private def graphErrors(spec: PipelineSpec): Seq[String] = {
     val errs = Seq.newBuilder[String]
     if (spec.sources.isEmpty) errs += "pipeline has no sources"
     val sourceNames = spec.sources.map(_.name)
@@ -72,12 +88,7 @@ object PipelineCompiler {
         errs += s"transform '${t.name}': depends_on '$d' does not exist"
       }
     }
-    spec.sinks.foreach { s =>
-      if (!SinkWriter.knownTypes.contains(s.sinkType))
-        errs += s"sink '${s.name}': unknown type '${s.sinkType}'"
-    }
-    val es = errs.result()
-    if (es.nonEmpty) throw new GraftAnalysisException(es.mkString("invalid pipeline spec:\n  ", "\n  ", ""))
+    errs.result()
   }
 
   def compile(spark: SparkSession, spec: PipelineSpec,
@@ -90,23 +101,28 @@ object PipelineCompiler {
     val unioned = spec.sources.map(s => ctx(s.name))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val obs = Seq.newBuilder[(String, org.apache.spark.sql.Observation)]
-    val df = spec.transforms.sortBy(_.orderIndex)
-      .foldLeft(unioned) { (d, t) =>
-        val out = Transforms(d, t, ctx)
-        if (!observeStages) out
-        else {
-          // a CollectMetrics barrier per stage: rows flowing out of
-          // each transform are observed DURING the sink action — no
-          // extra job per stage, unlike a count() probe. Name carries
-          // a nonce: observation names are session-global, and a
-          // pipeline can run many times in one session
-          val o = org.apache.spark.sql.Observation(
-            s"graft_stage_${java.util.UUID.randomUUID()}_${t.orderIndex}_${t.name}")
-          obs += t.name -> o
-          out.observe(o, org.apache.spark.sql.functions
-            .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        }
+    val df = transform(unioned, spec, ctx) { (t, out) =>
+      if (!observeStages) out
+      else {
+        // a CollectMetrics barrier per stage: rows flowing out of
+        // each transform are observed DURING the sink action — no
+        // extra job per stage, unlike a count() probe. Name carries
+        // a nonce: observation names are session-global, and a
+        // pipeline can run many times in one session
+        val o = org.apache.spark.sql.Observation(
+          s"graft_stage_${java.util.UUID.randomUUID()}_${t.orderIndex}_${t.name}")
+        obs += t.name -> o
+        out.observe(o, org.apache.spark.sql.functions
+          .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
       }
+    }
     Compiled(ctx, df, obs.result())
   }
+
+  /** The spec's transforms over `in`, in `order_index` order, each
+    * output passed through `after` — the one fold both runners use. */
+  def transform(in: DataFrame, spec: PipelineSpec, ctx: Map[String, DataFrame])(
+      after: (TransformSpec, DataFrame) => DataFrame = (_, d) => d): DataFrame =
+    spec.transforms.sortBy(_.orderIndex)
+      .foldLeft(in)((d, t) => after(t, Transforms(d, t, ctx)))
 }

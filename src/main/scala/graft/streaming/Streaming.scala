@@ -373,25 +373,20 @@ object Streaming {
       .start()
 
   /** Memory sink = gate/test surface, deliberately started with few
-    * state partitions: a stateful micro-batch schedules one task per
-    * shuffle partition PER stateful store (a stream-stream join keeps
-    * four), so at the bench session's 32 partitions a 6-file replay
-    * pays hundreds of near-empty state-store commits — measured 27 s →
-    * 8 s on the stream-stream join gate at 8 partitions. Partition
-    * count only shards state; results are identical. A production
-    * `startFileSink` query inherits the session setting untouched —
-    * at real stream volumes MORE state partitions is the correct
-    * direction, and this knob is why the number is per-query. The
-    * override rides a CLONED session (SessionBridge), so the caller's
-    * session conf is never touched — a set/restore window on the
-    * shared conf would race with concurrent batch work in the same
-    * session.
+    * state partitions ([[graft.GraftSession.gateStatePartitions]]: the
+    * session's count, capped at 8). A production `startFileSink` query
+    * inherits the session setting untouched — at real stream volumes
+    * MORE state partitions is the correct direction, and this is why
+    * the number is per-query. The override rides a CLONED session
+    * (SessionBridge), so the caller's session conf is never touched —
+    * a set/restore window on the shared conf would race with
+    * concurrent batch work in the same session.
     */
   def startMemorySink(df: DataFrame, name: String, mode: String = "append"): StreamingQuery = {
     import org.apache.spark.sql.graftbridge.SessionBridge
     val caller = df.sparkSession
     val isolated = SessionBridge.withConfOverrides(df,
-      Map("spark.sql.shuffle.partitions" -> "8",
+      Map(graft.GraftSession.gateStatePartitions(caller),
         // local temp checkpoints: manage WAL + state files via
         // java.nio (see NioCheckpointFileManager) — the default
         // FileContext manager forks a chmod per file create on hosts

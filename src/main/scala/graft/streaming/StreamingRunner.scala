@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftAnalysisException
+import graft.compile.PipelineCompiler
 import graft.sources.SourceReader
 import graft.spec.{PipelineSpec, SinkSpec}
-import graft.transforms.Transforms
 
 /** Streaming variant of the batch runner (SURVEY §7.2 step 8): the
   * same pipeline spec, with the FIRST source read as a file stream and
   * every other source kept static (stream–static joins are supported
   * by Spark natively). The stateless transform subset (filter / map /
   * select / rename / join / sql) and windowed aggregation apply
-  * unchanged — the compiler fold is literally the batch one.
+  * unchanged — validation and the transform fold are the batch
+  * compiler's own.
   *
   * Unsupported-in-streaming operators (sort, limit, deduplicate
   * without watermark, …) surface as analysis errors at `start`, which
@@ -29,7 +30,7 @@ object StreamingRunner {
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       maxFilesPerTrigger: Int = 10): StreamingRun = {
-    if (spec.sources.isEmpty) throw new GraftAnalysisException("streaming: no sources")
+    PipelineCompiler.validateGraph(spec)
     if (spec.sinks.size != 1)
       throw new GraftAnalysisException("streaming: exactly one sink per streaming pipeline")
 
@@ -47,8 +48,7 @@ object StreamingRunner {
     val ctx: Map[String, DataFrame] =
       Map(head.name -> stream) ++
         spec.sources.tail.map(s => s.name -> SourceReader.read(spark, s)).toMap
-    val df = spec.transforms.sortBy(_.orderIndex)
-      .foldLeft(stream)((d, t) => Transforms(d, t, ctx))
+    val df = PipelineCompiler.transform(stream, spec, ctx)()
 
     val sink = spec.sinks.head
     val query = startSink(df, sink, checkpoint, trigger)

@@ -1251,7 +1251,7 @@ object AggregateOp {
       if (cfg.objList("aggregations").nonEmpty) cfg.objList("aggregations") else Seq(cfg)
     // NOTE (optimization round 18): fanning an under-split scan out
     // before the aggregate was tried here and REJECTED by same-window
-    // alternating A/B (graft.AbAgg): a keyless repartition pays a
+    // alternating A/B: a keyless repartition pays a
     // local sort of every row before the exchange (SPARK-23207, guide
     // §2.5) and map-side partial aggregation already reduces the
     // shuffle to ~|groups| rows, so "aggregate before you shuffle"

@@ -115,6 +115,22 @@ class StreamingSpec extends SparkSuite {
     } finally run.query.stop()
   }
 
+  test("StreamingRunner: a dangling depends_on is refused at start, as in batch") {
+    import graft.spec._
+    val dir = java.nio.file.Files.createTempDirectory("graftsrunbad")
+    sf("events").limit(10).write.mode("overwrite").parquet(dir.toString + "/in")
+    val spec = PipelineSpec(
+      name = "stream_bad",
+      sources = Seq(SourceSpec("events", "parquet", Config.of("path" -> (dir.toString + "/in")))),
+      transforms = Seq(TransformSpec("f", "filter",
+        Config.of("field" -> "value", "op" -> "gt", "value" -> 5.0), Seq("missing"))),
+      sinks = Seq(SinkSpec("m", "memory", Config.of("table" -> "spec_stream_bad"))))
+    val e = intercept[GraftAnalysisException] {
+      graft.streaming.StreamingRunner.start(spark, spec, dir.toString + "/ckpt")
+    }
+    assert(e.getMessage.contains("depends_on 'missing' does not exist"))
+  }
+
   test("StreamingRunner: raw text stream flows through the same spec transforms") {
     import graft.spec._
     val dir = java.nio.file.Files.createTempDirectory("graftsruntext")

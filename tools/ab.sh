@@ -16,24 +16,16 @@ cd "$(dirname "$0")/.."
 QUERIES=$1; N=$2; LABEL=$3
 CP_A=$4; FLAGS_A=$5; CP_B=$6; FLAGS_B=$7
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-CPUS=${SPARK_GRAFT_CPUS:-32}
 REPEATS=${SPARK_GRAFT_BENCH_REPEATS:-2}
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
+source tools/jvm.sh
 OUT=/tmp/ab_$LABEL
 rm -rf "$OUT"; mkdir -p "$OUT"
 run_one() { # side cp flags out
   local side=$1 cp=$2 flags=$3 out=$4
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
+  SPARK_GRAFT_SF_DIR="$SF" \
   SPARK_GRAFT_BENCH_REPEATS="$REPEATS" SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
   SPARK_GRAFT_BENCH_OUT="$out" \
-  java $ADD_OPENS -Xmx48g $flags -cp "$cp:/opt/spark/jars/*" \
+  java $JVM_FLAGS $flags -cp "$cp:/opt/spark/jars/*" \
     graft.Bench >/dev/null 2>"$out.log"
 }
 for i in $(seq 1 "$N"); do

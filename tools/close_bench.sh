@@ -11,20 +11,13 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 N=${1:-3}
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
+source tools/jvm.sh
 OUTDIR=$(mktemp -d /tmp/benchclose.XXXX)
 for i in $(seq 1 "$N"); do
   echo "[close] bench run $i/$N ..." >&2
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_REPEATS=2 \
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_REPEATS=2 \
   SPARK_GRAFT_BENCH_OUT="$OUTDIR/run_$i.json" \
-  java $ADD_OPENS -Xmx48g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  java $JVM_FLAGS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.Bench >/dev/null 2>"$OUTDIR/run_$i.log"
 done
 python3 tools/splice_bench.py "$OUTDIR"/run_*.json > BENCH.json

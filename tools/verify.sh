@@ -2,22 +2,14 @@
 # Dev loop: compile, run graft.Verify with plain java (no sbt JVM tax),
 # then diff against the DuckDB oracle via tools/selfcheck.py.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 shift 2 2>/dev/null || shift $# 2>/dev/null || true
 sbt -batch compile 2>&1 | grep -E '^\[error\]|success' | tail -3
 rm -rf "$OUT"
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+source tools/jvm.sh
+java $JVM_FLAGS \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" 2>&1 | grep -vE '^[0-9/]+ [0-9:]+ (WARN|INFO)' | head -20
 python3 tools/selfcheck.py "$OUT" "$SF" "$@"
